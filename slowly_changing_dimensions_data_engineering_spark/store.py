@@ -10,7 +10,8 @@ plain parquet:
   ``<table>/v{N}/`` and then atomically swaps a pointer file. Readers
   resolve the pointer first, so a reader never sees a half-written
   version (same pointer-swap protocol object-store tables use; on HDFS/
-  S3 the pointer write is a single small PUT).
+  S3 the pointer write is a single small PUT). TRUNCATE and RESTORE
+  are metadata-only commits: a pointer swap with no directory.
 - **Change feed** (reference stream, C1/C2): a commit may attach the CDC
   rows it produced as ``<table>/_changes/v{N}/``. Reading the stream =
   reading every change batch past a consumer's offset.
@@ -55,11 +56,14 @@ import os
 import shutil
 import threading
 import time
+import urllib.parse
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .schemas import cdc_schema
 
 # Commit-lock tuning. A legitimate hold is microseconds (one json
 # read-modify-write of a pointer file); the timeout only guards a
@@ -67,6 +71,10 @@ from pyspark.sql import types as T
 # holder's flock the instant its fds close, so there is no staleness
 # heuristic and no steal protocol (see _swap_meta).
 LOCK_TIMEOUT_SECS = 60.0
+
+#: Size a commit's write aims for per parquet file (and so per write
+#: task) — the OPTIMIZE default of Delta and Iceberg.
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -369,8 +377,8 @@ class TableStore:
             rows.append((int(h["v"]),
                          float(h["ts"]) if h.get("ts") is not None else None,
                          os.path.isdir(self._cdir(name, int(h["v"]))),
-                         len(h.get("segments", [])) or None,
-                         len(h.get("buckets", {})) or None))
+                         len(h["segments"]) if "segments" in h else None,
+                         len(h["buckets"]) if "buckets" in h else None))
         schema = ("version long, commit_ts double, has_changes boolean, "
                   "n_segments long, n_buckets long")
         return spark.createDataFrame(rows, schema)
@@ -444,13 +452,15 @@ class TableStore:
                 {"v": 0, "buckets": dict(new_meta["buckets"]),
                  "ts": time.time()})
         else:
-            for s in meta.get("segments", [meta["latest"]]):
+            segs = meta.get("segments", [meta["latest"]])
+            for s in segs:
                 self._link_tree(self._vdir(src, s), dstdir)
+            # a truncated source has no segments, so neither has v0
+            new_meta["segments"] = [0] if segs else []
             new_meta.setdefault("history", []).append(
-                {"v": 0, "segments": [0], "ts": time.time()})
+                {"v": 0, "segments": list(new_meta["segments"]),
+                 "ts": time.time()})
         new_meta["latest"] = 0
-        if not meta.get("bucket"):
-            new_meta["segments"] = [0]
         self._write_meta(dst, new_meta)
 
     @staticmethod
@@ -505,7 +515,9 @@ class TableStore:
         per-bucket pointer map recorded at that commit (a version dir
         alone holds only the buckets that commit rewrote); on a plain
         table, from the segment list recorded at that commit (an append
-        commit's dir holds only the appended rows)."""
+        commit's dir holds only the appended rows). A snapshot with no
+        files (before the first commit, or truncated) reads as the empty
+        frame."""
         if as_of is not None:
             if version is not None:
                 raise ValueError("pass either version or as_of, not both")
@@ -514,8 +526,8 @@ class TableStore:
         v = meta["latest"] if version is None else version
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
         if v < 0:
-            return spark.createDataFrame([], schema)
-        if meta.get("bucket"):
+            paths = []
+        elif meta.get("bucket"):
             if version is not None and version != meta["latest"]:
                 hist = {h["v"]: h["buckets"] for h in meta.get("history", [])}
                 if version not in hist:
@@ -523,10 +535,7 @@ class TableStore:
                         f"no recorded bucket map for {name!r} v{version}")
                 meta = dict(meta, buckets=hist[version])
             paths = self._bucket_paths(name, meta)
-            if not paths:
-                return spark.createDataFrame([], schema)
-            return spark.read.schema(schema).parquet(*paths)
-        if version is not None and version != meta["latest"]:
+        elif version is not None and version != meta["latest"]:
             hist = meta.get("history", [])
             if hist:
                 seg_map = {h["v"]: h.get("segments", [h["v"]]) for h in hist}
@@ -543,10 +552,12 @@ class TableStore:
             else:
                 # pre-history meta: every version dir is a full snapshot
                 segs = [version]
+            paths = [self._vdir(name, s) for s in segs]
         else:
-            segs = meta.get("segments", [v])
-        return spark.read.schema(schema).parquet(
-            *[self._vdir(name, s) for s in segs])
+            paths = [self._vdir(name, s) for s in meta.get("segments", [v])]
+        if not paths:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*paths)
 
     def read_buckets(self, spark: SparkSession, name: str,
                      bucket_ids: Iterable[int]) -> DataFrame:
@@ -561,21 +572,83 @@ class TableStore:
         return spark.read.schema(schema).parquet(*paths)
 
     # ---- commit ----------------------------------------------------------
+    # How many tasks a commit's write uses — and so how many files it
+    # leaves — follows from the bytes being written, never from a core
+    # or bucket count. Every write task pays a fixed cost (deserializing
+    # the write job, opening and closing a file), so at delta sizes the
+    # rule is what keeps a commit from being bound by that fixed cost:
+    # - bucketed snapshots: ``_clustered`` — one coalescable shuffle on
+    #   the bucket id, one file per bucket;
+    # - plain snapshots: ``_sized`` — coalesced to
+    #   ceil(input bytes / target file bytes);
+    # - change batches: ``_stage_write`` — one AQE-sized shuffle.
     @staticmethod
     def _clustered(df: DataFrame, cols: list[str], n: int,
                    sort_within: list[F.Column] | None = None) -> DataFrame:
-        """Cluster rows by bucket before a partitionBy write: without
-        this, every shuffle task emits a file into every bucket dir
-        (tasks × buckets tiny files); with it, each bucket is written by
-        ~one task. Same pattern as Delta optimized writes. AQE may
-        coalesce further. ``sort_within`` additionally orders rows
-        INSIDE each bucket (sortWithinPartitions — no extra shuffle);
-        the per-bucket Z-ORDER path rides this."""
+        """Cluster rows by bucket before a partitionBy write. The
+        shuffle on ``_bucket`` has no explicit partition count, so AQE
+        coalesces its partitions by size: a small rewrite is written by
+        one task, a large one by as many as its bytes need. Coalescing
+        only merges whole partitions, so every bucket is written by
+        exactly one task — ONE file per rewritten bucket per commit,
+        which is what keeps ``compact(max_files_per_bucket)``
+        converging (a REBALANCE would split large buckets across tasks,
+        and without any shuffle every task would emit a file into every
+        bucket dir). ``sort_within`` additionally orders rows INSIDE
+        each bucket (sortWithinPartitions — no extra shuffle); the
+        per-bucket Z-ORDER path rides this."""
         out = (df.withColumn("_bucket", bucket_id(cols, n))
-               .repartition(n, F.col("_bucket")))
+               .repartition(F.col("_bucket")))
         if sort_within:
             out = out.sortWithinPartitions(F.col("_bucket"), *sort_within)
         return out
+
+    @staticmethod
+    def _file_bytes(files: Iterable[str]) -> int:
+        """On-disk bytes of ``files``: local paths, or the ``file:`` URIs
+        ``DataFrame.inputFiles()`` returns. The store's one size
+        estimate — plain commits size their writes by it, and compact
+        judges fragmentation by it."""
+        return sum(os.path.getsize(
+            urllib.parse.unquote(urllib.parse.urlparse(f).path)
+            if f.startswith("file:") else f) for f in files)
+
+    @staticmethod
+    def _n_files(nbytes: int, target_file_bytes: int) -> int:
+        return max(1, -(-nbytes // target_file_bytes))  # ceil, at least 1
+
+    @classmethod
+    def _sized(cls, df: DataFrame, target_file_bytes: int) -> DataFrame:
+        """A plain snapshot write coalesced to ceil(input bytes / target
+        file bytes) tasks, input bytes being the files ``df`` reads (a
+        MASTER rebuild over a small STAGING is one task and one file).
+        ``compact`` sizes by the same rule from the table's own bytes,
+        so a fresh commit is a no-op for it whenever its output is no
+        smaller than its input (and always while both fit one target
+        file). A frame that reads no files (built in memory, or from a
+        checkpoint) gives no estimate and keeps its own partitioning."""
+        files = df.inputFiles()
+        if not files:
+            return df
+        return df.coalesce(cls._n_files(cls._file_bytes(files),
+                                        target_file_bytes))
+
+    @staticmethod
+    def _stage_write(name: str, kind: str, stage: str, out: DataFrame,
+                     changes: DataFrame | None, bucketed: bool) -> None:
+        """Write a transaction's data (and change batch) to its staging
+        dir. The change batch goes through one AQE-sized shuffle: a
+        small batch is one task and one file, not one per branch of the
+        union that built it."""
+        if PLAN_CAPTURE is not None:
+            PLAN_CAPTURE(name, kind, out)
+        writer = out.write.mode("errorifexists")
+        if bucketed:
+            writer = writer.partitionBy("_bucket")
+        writer.parquet(os.path.join(stage, "data"))
+        if changes is not None:
+            (changes.hint("rebalance").write.mode("errorifexists")
+             .parquet(os.path.join(stage, "changes")))
 
     def _stage_dir(self, name: str) -> str:
         """A private staging directory for one transaction's data
@@ -606,15 +679,21 @@ class TableStore:
         assigned under the lock, so no committed version references
         it, and live writers stage under ``_txn/``) — cleared here,
         race-free, so the table can never wedge on it."""
-        for orphan in (self._vdir(name, v), self._cdir(name, v)):
-            if os.path.exists(orphan):
-                shutil.rmtree(orphan)
+        self._clear_orphans(name, v)
         os.rename(os.path.join(stage, "data"), self._vdir(name, v))
         if has_changes:
             os.makedirs(os.path.join(self._tdir(name), "_changes"),
                         exist_ok=True)
             os.rename(os.path.join(stage, "changes"), self._cdir(name, v))
         shutil.rmtree(stage, ignore_errors=True)
+
+    def _clear_orphans(self, name: str, v: int) -> None:
+        """Remove crash orphans at version ``v``'s data and change paths
+        (see ``_promote``) — called inside the critical section that
+        assigns ``v``."""
+        for orphan in (self._vdir(name, v), self._cdir(name, v)):
+            if os.path.exists(orphan):
+                shutil.rmtree(orphan)
 
     def _swap_meta(self, name: str, apply):
         """The optimistic-concurrency critical section: re-read the
@@ -720,6 +799,12 @@ class TableStore:
         (bucketed tables) orders rows inside each bucket at write time —
         the per-bucket Z-ORDER layout hook used by ``compact``.
 
+        The write's task count follows from its bytes (see the rule
+        above ``_clustered``): a bucketed snapshot is written one file
+        per bucket by as few tasks as AQE coalesces its shuffle to; a
+        plain snapshot by ceil(input bytes / ``TARGET_FILE_BYTES``)
+        tasks, one file each.
+
         ``offsets`` = {consumer: consumed_to_version} records stream
         consumption ATOMICALLY with this commit — the map lands in the
         same ``meta.json`` rewrite as the snapshot pointer (one
@@ -747,6 +832,17 @@ class TableStore:
         semantics). A concurrent ``add_column`` is a conflict too — the
         schema this commit validated against is gone (Delta's
         metadata-change rule): detected via the meta's schema epoch."""
+        return self._commit(name, df, changes, sort_within, offsets,
+                            read_version, TARGET_FILE_BYTES)
+
+    def _commit(self, name: str, df: DataFrame,
+                changes: DataFrame | None = None,
+                sort_within: list[F.Column] | None = None,
+                offsets: dict[str, int] | None = None,
+                read_version: int | None = None,
+                target_file_bytes: int = TARGET_FILE_BYTES) -> int:
+        """``commit`` with the plain-snapshot file size as a parameter
+        (``compact`` passes its own)."""
         meta = self._read_meta(name)
         df = self._check_schema(name, meta, df)
         if read_version is None:
@@ -762,19 +858,11 @@ class TableStore:
         stage = self._stage_dir(name)
         bucket = meta.get("bucket")
         if bucket:
-            cols, n = bucket["cols"], bucket["n"]
-            out = self._clustered(df, cols, n, sort_within)
-            writer = out.write.mode("errorifexists").partitionBy("_bucket")
+            n = bucket["n"]
+            out = self._clustered(df, bucket["cols"], n, sort_within)
         else:
-            n = None
-            out = df
-            writer = out.write.mode("errorifexists")
-        if PLAN_CAPTURE is not None:
-            PLAN_CAPTURE(name, "commit", out)
-        writer.parquet(os.path.join(stage, "data"))
-        if changes is not None:
-            changes.write.mode("errorifexists").parquet(
-                os.path.join(stage, "changes"))
+            out = self._sized(df, target_file_bytes)
+        self._stage_write(name, "commit", stage, out, changes, bool(bucket))
 
         def apply(fresh: dict) -> None:
             if fresh["latest"] != read_version:
@@ -872,12 +960,7 @@ class TableStore:
         df = self._check_schema(name, meta, df)
         read_epoch = meta.get("schema_epoch", 0)
         stage = self._stage_dir(name)
-        if PLAN_CAPTURE is not None:
-            PLAN_CAPTURE(name, "append", df)
-        df.write.mode("errorifexists").parquet(os.path.join(stage, "data"))
-        if changes is not None:
-            changes.write.mode("errorifexists").parquet(
-                os.path.join(stage, "changes"))
+        self._stage_write(name, "append", stage, df, changes, False)
 
         def apply(fresh: dict) -> int:
             if read_version is not None and fresh["latest"] != read_version:
@@ -947,15 +1030,8 @@ class TableStore:
             base_map = dict(base_map)
         ours = {str(int(k)) for k in bucket_ids}
         stage = self._stage_dir(name)
-        clustered = self._clustered(df, cols, n)
-        if PLAN_CAPTURE is not None:
-            PLAN_CAPTURE(name, "commit_buckets", clustered)
-        (clustered
-         .write.mode("errorifexists").partitionBy("_bucket")
-         .parquet(os.path.join(stage, "data")))
-        if changes is not None:
-            changes.write.mode("errorifexists").parquet(
-                os.path.join(stage, "changes"))
+        self._stage_write(name, "commit_buckets", stage,
+                          self._clustered(df, cols, n), changes, True)
 
         def apply(fresh: dict) -> int:
             if fresh["latest"] != read_version:
@@ -1071,18 +1147,16 @@ class TableStore:
             return self.commit_buckets(
                 name, self.read_buckets(spark, name, frag), frag)
         segs = meta.get("segments", [latest])
-        files: list[str] = []
-        for s in segs:
-            files.extend(self._parquet_files(self._vdir(name, s)))
-        nbytes = sum(os.path.getsize(f) for f in files)
-        need = max(1, -(-nbytes // target_file_bytes))  # ceil
+        files = [f for s in segs
+                 for f in self._parquet_files(self._vdir(name, s))]
+        need = self._n_files(self._file_bytes(files), target_file_bytes)
         if cluster_by:
-            return self.commit(
-                name, zorder_cluster(self.read(spark, name),
-                                     cluster_by, int(need)))
-        if len(segs) <= 1 and len(files) <= need:
+            cur = zorder_cluster(self.read(spark, name), cluster_by, need)
+        elif len(segs) <= 1 and len(files) <= need:
             return latest
-        return self.commit(name, self.read(spark, name).coalesce(int(need)))
+        else:
+            cur = self.read(spark, name)  # the commit coalesces it to need
+        return self._commit(name, cur, target_file_bytes=target_file_bytes)
 
     def restore(self, name: str, version: int) -> int:
         """``RESTORE TABLE … TO VERSION`` (Delta RESTORE / Snowflake
@@ -1225,8 +1299,27 @@ class TableStore:
 
     def truncate(self, spark: SparkSession, name: str) -> int:
         """S8: TRUNCATE TABLE (SCD-Automation.sql:38) — commit an empty
-        snapshot; history (and any unconsumed changes) stays intact."""
-        return self.commit(name, spark.createDataFrame([], self.schema(name)))
+        snapshot, metadata-only like ``restore``: no Spark job, no data
+        written. A plain table's new version lists no segments; on a
+        bucketed table every bucket points at the new version, which
+        has no directory (a missing bucket dir is an empty bucket).
+        History (and any unconsumed changes) stays intact. ``spark`` is
+        unused and kept for the call signature."""
+        def apply(fresh: dict) -> int:
+            v = fresh["latest"] + 1
+            self._clear_orphans(name, v)
+            entry = {"v": v, "ts": time.time()}
+            if fresh.get("bucket"):
+                fresh["buckets"] = {str(k): v
+                                    for k in range(fresh["bucket"]["n"])}
+                entry["buckets"] = dict(fresh["buckets"])
+            else:
+                fresh["segments"] = entry["segments"] = []
+            fresh.setdefault("history", []).append(entry)
+            fresh["latest"] = v
+            return v
+
+        return self._swap_meta(name, apply)
 
     # ---- change feed (C1/C2/C3) -------------------------------------------
     def change_versions(self, name: str, since: int) -> list[int]:
@@ -1242,7 +1335,11 @@ class TableStore:
         vs = self.change_versions(name, since)
         if not vs:
             return None
-        return spark.read.parquet(*[self._cdir(name, v) for v in vs])
+        # The declared change schema, not one batch's footer: batches
+        # committed before an ADD COLUMN lack the column (it reads as
+        # NULL), and no schema-inference job runs.
+        return spark.read.schema(cdc_schema(self.schema(name))).parquet(
+            *[self._cdir(name, v) for v in vs])
 
     # ---- consumer offsets (C3) ---------------------------------------------
     def _offset_path(self, consumer: str) -> str:

@@ -115,6 +115,83 @@ def test_truncate_and_empty_bucket_handling(spark, tmp_path):
     assert store.read(spark, "t").count() == 1
 
 
+def test_truncate_is_metadata_only(spark, tmp_path):
+    """TRUNCATE on a plain and on a bucketed table commits an empty
+    snapshot without writing data: no version dir, empty now and by
+    time travel, and clone, compact, vacuum and restore all handle the
+    fileless version."""
+    store = TableStore(str(tmp_path))
+    store.create("p", schemas.SUPPLIER)
+    store.create("b", schemas.SUPPLIER, bucket_by=(KEY, 4))
+    for t in ("p", "b"):
+        merge_upsert(store, spark, t, _supplier_rows(spark, range(8)),
+                     KEY, CMP)                                       # v0
+        assert store.truncate(spark, t) == 1                         # v1
+        assert not os.path.exists(store._vdir(t, 1))
+        assert store.read(spark, t).count() == 0
+        assert store.read(spark, t, version=1).count() == 0
+        assert store.read(spark, t, version=0).count() == 8
+        assert store.compact(spark, t) == 1
+    assert [(r["n_segments"], r["n_buckets"]) for r in
+            store.history_df(spark, "p").orderBy("version").collect()] \
+        == [(1, None), (0, None)]
+    assert [(r["n_segments"], r["n_buckets"]) for r in
+            store.history_df(spark, "b").orderBy("version").collect()] \
+        == [(None, 4), (None, 4)]
+
+    # a clone of a truncated table is empty and writable
+    for t in ("p", "b"):
+        store.clone(t, f"{t}_dup")
+        assert store.read(spark, f"{t}_dup").count() == 0
+        merge_upsert(store, spark, f"{t}_dup", _supplier_rows(spark, [1]),
+                     KEY, CMP)
+        assert store.read(spark, f"{t}_dup").count() == 1
+
+    # restore back to the truncated version, then vacuum every data dir
+    for t in ("p", "b"):
+        merge_upsert(store, spark, t, _supplier_rows(spark, range(3)),
+                     KEY, CMP)                                       # v2
+        assert store.read(spark, t).count() == 3
+        assert store.restore(t, 1) == 3
+        assert store.read(spark, t).count() == 0
+        assert sorted(store.vacuum(t, keep_last=1)) == [0, 2]
+        assert not [d for d in os.listdir(store._tdir(t))
+                    if d.startswith("v")]
+        assert store.read(spark, t).count() == 0
+        merge_upsert(store, spark, t, _supplier_rows(spark, range(2)),
+                     KEY, CMP)
+        assert store.read(spark, t).count() == 2
+
+
+def test_small_commits_write_one_file_per_bucket_and_batch(spark, tmp_path):
+    """Commit writes are sized by bytes: a small bucketed rewrite leaves
+    exactly one parquet file per rewritten bucket and one for its
+    change batch, a full-snapshot commit of a small plain table leaves
+    one file, and compact finds nothing to do on either."""
+    store = TableStore(str(tmp_path))
+    store.create("landing", schemas.SUPPLIER, bucket_by=(KEY, N_BUCKETS))
+    v1 = merge_upsert(store, spark, "landing",
+                      _supplier_rows(spark, range(64)), KEY, CMP)
+    # pruned merge: 4 updated keys and 2 new ones
+    delta = _supplier_rows(spark, [3, 7, 12, 40, 100, 101]).withColumn(
+        "supplier_name", F.lit("renamed"))
+    v2 = merge_upsert(store, spark, "landing", delta, KEY, CMP)
+    for v in (v1, v2):
+        for b in _written_buckets(store, "landing", v):
+            files = store._parquet_files(
+                os.path.join(store._vdir("landing", v), b))
+            assert len(files) == 1, (v, b, files)
+    assert len(_written_buckets(store, "landing", v1)) == N_BUCKETS
+    assert len(store._parquet_files(store._cdir("landing", v2))) == 1
+    assert store.compact(spark, "landing") == v2
+
+    store.create("master", schemas.SUPPLIER)
+    vm = store.commit("master", store.read(spark, "landing"))
+    assert len(store._parquet_files(store._vdir("master", vm))) == 1
+    assert store.read(spark, "master").count() == 66
+    assert store.compact(spark, "master") == vm
+
+
 def test_merge_on_table_bucketed_outside_key_falls_back(spark, tmp_path):
     """A table bucketed on a NON-key column must not take the pruned
     path: a source row whose bucket column changed would miss its match

@@ -543,6 +543,47 @@ def test_merge_schema_evolution_two_load_golden(spark, tmp_path):
     assert ch2 is None or ch2.count() == 0
 
 
+def test_read_changes_keeps_columns_added_by_schema_evolution(spark, tmp_path):
+    """A stream read spanning an ADD COLUMN returns the declared change
+    schema: the batch committed before the evolution reads the new
+    column as NULL and the later batch keeps its values, whichever
+    batch's footer a reader would have inferred the schema from."""
+    from pyspark.sql import Row
+
+    from slowly_changing_dimensions_data_engineering_spark import schemas
+    from slowly_changing_dimensions_data_engineering_spark.operators.merge import merge_upsert
+    from slowly_changing_dimensions_data_engineering_spark.store import TableStore
+
+    store = TableStore(str(tmp_path))
+    store.create("landing", schemas.SUPPLIER,
+                 bucket_by=(["supplier_code"], 4))
+    key, cmp_cols = ["supplier_code"], ["supplier_state"]
+    merge_upsert(store, spark, "landing", spark.createDataFrame(
+        [Row(supplier_key=1, supplier_code="A1", supplier_name="n1",
+             supplier_state="CA"),
+         Row(supplier_key=2, supplier_code="A2", supplier_name="n2",
+             supplier_state="NY")], schemas.SUPPLIER), key, cmp_cols)
+    load2 = spark.createDataFrame(
+        [Row(supplier_key=1, supplier_code="A1", supplier_name="n1",
+             supplier_state="WA", supplier_phone="555-1"),
+         Row(supplier_key=3, supplier_code="A3", supplier_name="n3",
+             supplier_state="OR", supplier_phone="555-3")],
+        "supplier_key long, supplier_code string, supplier_name string, "
+        "supplier_state string, supplier_phone string")
+    merge_upsert(store, spark, "landing", load2, key,
+                 cmp_cols + ["supplier_phone"], evolve_schema=True)
+
+    ch = store.read_changes(spark, "landing", since=-1)
+    assert "supplier_phone" in ch.columns
+    rows = {(r["METADATA$ACTION"], r["METADATA$ISUPDATE"],
+             r["supplier_code"], r["supplier_phone"]) for r in ch.collect()}
+    assert rows == {("INSERT", False, "A1", None),
+                    ("INSERT", False, "A2", None),
+                    ("DELETE", True, "A1", None),
+                    ("INSERT", True, "A1", "555-1"),
+                    ("INSERT", False, "A3", "555-3")}
+
+
 def test_evolve_schema_concurrent_same_name_different_type_raises(
         spark, tmp_path, monkeypatch):
     """ADVICE r15 (low): a column that appears between the evolve pass's
