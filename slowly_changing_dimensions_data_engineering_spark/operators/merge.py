@@ -22,14 +22,19 @@ Semantics preserved deliberately (SURVEY.md edge cases 3, 5):
 - **No delete propagation**: rows absent from the source are kept
   untouched (the reference MERGE has no NOT-MATCHED-BY-SOURCE clause).
 
-Physical strategy (100 TB notes): expressed as
-  source LEFT JOIN target  (categorize each source row)
-  + target LEFT ANTI JOIN touched-keys (rows to carry over unchanged)
+Physical strategy (100 TB notes): two joins, each evaluated once —
+  source LEFT JOIN target   (``cat``: categorize each source row)
+  target LEFT JOIN key tags (``tagged``: one tag per updated or
+                             tombstoned key, ``_target_images``)
 instead of a FULL OUTER join, because Spark can broadcast the small side
-of left/anti joins but a full-outer join forces sort-merge. For an
-incremental load (source ≪ target) the delta frame is tiny: Catalyst
-broadcasts it, the anti-join is a broadcast probe, and the only
-large-data motion is the rewrite of the target snapshot — the same cost
+of left joins but a full-outer join forces sort-merge. Both frames are
+stabilized, and every row a merge emits is a filter of one of them: new
+images and inserts come from ``cat``; kept rows, update pre-images and
+tombstone images from ``tagged``. So the snapshot write and the change
+write read the target ONCE between them. For an incremental load
+(source ≪ target) the tag frame is tiny and AQE broadcasts it; the only
+large-data motion is the one target scan and its materialization, which
+the commit's rewrite of the target snapshot pays anyway — the same cost
 profile as a Delta MERGE that rewrites matched files.
 """
 
@@ -51,6 +56,61 @@ def _any_changed(cols: list[str], left: str, right: str):
         lambda a, b: a | b,
         [F.col(f"{left}.{c}") != F.col(f"{right}.{c}") for c in cols],
     )
+
+
+def _row_id(key: list[str], prefix: str | None = None):
+    """METADATA$ROW_ID: stable per logical row — hash of the merge key
+    (Snowflake's row id is opaque; a key hash preserves its contract:
+    the DELETE+INSERT pair of one update shares one id, golden
+    Setup.sql:224-227)."""
+    return F.md5(F.concat_ws("\x1f", *[
+        F.col(f"{prefix}.{k}" if prefix else k).cast("string") for k in key]))
+
+
+def _target_images(target: DataFrame, cat: DataFrame,
+                   key: list[str]) -> tuple[DataFrame, DataFrame]:
+    """The target side of a merge in ONE pass: ``(kept, gone)`` — the
+    target rows no update or delete touched, and the change rows that
+    retire touched ones (an update's DELETE pre-image, ISUPDATE=true,
+    or a tombstone's DELETE image, ISUPDATE=false). ``cat`` is the
+    categorized source⋈target frame with an ``_op`` per source row.
+
+    The ``update``/``delete`` source keys collapse to one tag per key,
+    ``update`` winning, and the target is left-joined to the tags once
+    and stabilized; ``kept`` and ``gone`` are filters of that frame, so
+    the snapshot write and the change write share one target scan.
+
+    Images come from the TARGET side, NOT from the source×target matched
+    pairs: a duplicate-key source load matches one target row twice, and
+    pair-derived pre-images would emit that row's DELETE twice — a
+    change stream that no longer sums to the snapshot delta (a signed
+    fold, e.g. an incremental MV, would over-subtract; caught by the
+    sf0.01 S99 key collision in the synthetic load-2). One image per
+    PHYSICAL target row keeps stream ≡ snapshot delta for both
+    dup-source and dup-target edges. The per-key tag extends that rule
+    to a load that both tombstones and updates one key: the key's new
+    image is inserted, so the old row leaves as ONE update pre-image
+    (update wins), never as a pre-image plus a tombstone. (Snowflake
+    itself ERRORs on this nondeterministic merge; we keep all source
+    images and a consistent stream instead.)
+
+    The tag frame scales with the LOAD, not a constant — no
+    unconditional broadcast hint (a 100× backfill would OOM the
+    driver); AQE's dynamic join selection broadcasts it when it is in
+    fact delta-sized."""
+    tags = (cat.filter(F.col("_op").isin("update", "delete"))
+            .groupBy(*[F.col(f"s.{k}").alias(k) for k in key])
+            .agg(F.bool_or(F.col("_op") == "update").alias("_upd")))
+    tagged = stabilize(target.join(tags, key, "left"))
+    cols = target.columns
+    kept = tagged.filter(F.col("_upd").isNull()).select(*cols)
+    # ``<=>`` is never NULL, so ISUPDATE stays a non-nullable column like
+    # the literal flags of the other change rows (same file schema).
+    gone = (tagged.filter(F.col("_upd").isNotNull())
+            .select(*cols, F.lit("DELETE").alias(CDC_ACTION),
+                    F.col("_upd").eqNullSafe(True).alias(CDC_ISUPDATE),
+                    _row_id(key).alias(CDC_ROW_ID)))
+    return kept, gone
 
 
 def plan_upsert(
@@ -93,8 +153,8 @@ def plan_upsert(
     on = [F.col(f"s.{k}") == F.col(f"t.{k}") for k in key]
 
     # Categorize every source row in ONE pass: delete / update / insert /
-    # no-op. The categorized frame feeds the CDC unions, the touched-key
-    # sets, and the new rows; stabilize() materializes the source⋈target
+    # no-op. The categorized frame feeds the CDC unions, the key tags,
+    # and the new rows; stabilize() materializes the source⋈target
     # join once instead of re-scanning the big target per branch — the
     # same source-materialization step a Delta MERGE performs. The
     # strategy (executor-local blocks vs reliable checkpoint vs pure
@@ -114,66 +174,21 @@ def plan_upsert(
     )
     s_cols = [F.col(f"s.{c}").alias(c) for c in cols]
 
-    # METADATA$ROW_ID: stable per logical row — hash of the merge key
-    # (Snowflake's row id is opaque; a key hash preserves its contract:
-    # the DELETE+INSERT pair of one update shares one id, golden
-    # Setup.sql:224-227).
-    def row_id(prefix: str):
-        return F.md5(F.concat_ws("\x1f", *[F.col(f"{prefix}.{k}").cast("string") for k in key]))
-
     inserts = (
         cat.filter(F.col("_op") == "insert")
         .select(*s_cols, F.lit("INSERT").alias(CDC_ACTION),
-                F.lit(False).alias(CDC_ISUPDATE), row_id("s").alias(CDC_ROW_ID))
+                F.lit(False).alias(CDC_ISUPDATE), _row_id(key, "s").alias(CDC_ROW_ID))
     )
     upd_post = (
         cat.filter(F.col("_op") == "update")
         .select(*s_cols, F.lit("INSERT").alias(CDC_ACTION),
-                F.lit(True).alias(CDC_ISUPDATE), row_id("s").alias(CDC_ROW_ID))
+                F.lit(True).alias(CDC_ISUPDATE), _row_id(key, "s").alias(CDC_ROW_ID))
     )
-    # The touched-key set scales with the LOAD, not a constant — no
-    # unconditional broadcast hint (a 100× backfill would OOM the
-    # driver); AQE's dynamic join selection broadcasts it when it is in
-    # fact delta-sized.
-    touched = (
-        cat.filter(F.col("_op") == "update")
-        .select(*[F.col(f"s.{k}").alias(k) for k in key])
-        .distinct()
-    )
-    # DELETE pre-images come from the TARGET side (semi join on touched
-    # keys), NOT from the source×target matched pairs: a duplicate-key
-    # source load matches one target row twice, and pair-derived
-    # pre-images would emit that row's DELETE twice — a change stream
-    # that no longer sums to the snapshot delta (a signed fold, e.g. an
-    # incremental MV, would over-subtract; caught by the sf0.01 S99
-    # key collision in the synthetic load-2). One pre-image per PHYSICAL
-    # target row keeps stream ≡ snapshot delta for both dup-source and
-    # dup-target edges. (Snowflake itself ERRORs on this nondeterministic
-    # merge; we keep all source images and a consistent stream instead.)
-    def t_side_images(keys_df, action, isupdate):
-        return (target.join(keys_df, key, "semi")
-                .select(*cols, F.lit(action).alias(CDC_ACTION),
-                        F.lit(isupdate).alias(CDC_ISUPDATE),
-                        F.md5(F.concat_ws("\x1f", *[F.col(k).cast("string")
-                                                    for k in key]))
-                        .alias(CDC_ROW_ID)))
+    kept, gone = _target_images(target, cat, key)
+    changes = inserts.unionByName(upd_post).unionByName(gone)
 
-    upd_pre = t_side_images(touched, "DELETE", True)
-    # WHEN MATCHED DELETE tombstones: target-side images, ISUPDATE=false
-    # (a true removal, distinguishable from an update's pre-image), one
-    # per physical target row by the same semi-join rule as upd_pre.
-    touched_del = (
-        cat.filter(F.col("_op") == "delete")
-        .select(*[F.col(f"s.{k}").alias(k) for k in key])
-        .distinct()
-    )
-    del_rows = t_side_images(touched_del, "DELETE", False)
-    changes = inserts.unionByName(upd_post).unionByName(upd_pre) \
-                     .unionByName(del_rows)
-
-    # New snapshot: carry over target rows whose key was NOT touched by
-    # an update OR a delete, then add the updated images and the inserts.
-    kept = target.join(touched.unionByName(touched_del), key, "left_anti")
+    # New snapshot: the target rows no update or delete touched, plus
+    # the updated images and the inserts.
     new_rows = cat.filter(F.col("_op").isin("update", "insert")).select(*s_cols)
     new_target = kept.unionByName(new_rows)
     return new_target, changes
@@ -313,10 +328,9 @@ def _merge_upsert_once(store, spark, target_name: str, source: DataFrame,
                     else delete_match)
             src = src.filter(~F.coalesce(pred.cast("boolean"), F.lit(False)))
         src = src.select(*cols)
-        rid = F.md5(F.concat_ws("\x1f", *[F.col(k).cast("string") for k in key]))
         changes = src.select(
             *cols, F.lit("INSERT").alias(CDC_ACTION),
-            F.lit(False).alias(CDC_ISUPDATE), rid.alias(CDC_ROW_ID))
+            F.lit(False).alias(CDC_ISUPDATE), _row_id(key).alias(CDC_ROW_ID))
         # "The table was empty" is itself a snapshot observation — two
         # racing first loads must not both land (the loser re-derives
         # through the retry wrapper into the matched path).
@@ -330,6 +344,8 @@ def _merge_upsert_once(store, spark, target_name: str, source: DataFrame,
     if spec is not None and set(spec[0]) <= set(key):
         bcols, n = spec
         ids = touched_buckets(source, bcols, n)
+        if not ids:
+            return read_version  # empty load: no empty commit
         target = store.read_buckets(spark, target_name, ids)
         new_target, changes = plan_upsert(target, source, key, compare_cols,
                                           delete_match)
@@ -338,11 +354,18 @@ def _merge_upsert_once(store, spark, target_name: str, source: DataFrame,
     target = store.read(spark, target_name, version=read_version)
     new_target, changes = plan_upsert(target, source, key, compare_cols,
                                       delete_match)
-    # The source is re-read by both plans; localCheckpoint the categorized
-    # outputs would also work — for pipeline loads the source is a small
-    # batch, so recomputation is cheaper than a cache of the big side.
-    return store.commit(target_name, new_target, changes=changes,
-                        read_version=read_version)
+    return store.commit(target_name, _sized_as(store, new_target, target),
+                        changes=changes, read_version=read_version)
+
+
+def _sized_as(store, new_target: DataFrame, target: DataFrame) -> DataFrame:
+    """A merged plain snapshot reads only stabilized frames, which give
+    the store's byte-sized write rule (``TableStore._sized``) no input
+    bytes; size it from the target snapshot it replaces instead — the
+    estimate the rule would make for a direct rewrite of that target."""
+    from ..store import TARGET_FILE_BYTES
+    return new_target.coalesce(store._n_files(
+        store._file_bytes(target.inputFiles()), TARGET_FILE_BYTES))
 
 
 def plan_scd0(target: DataFrame, source: DataFrame,
@@ -366,11 +389,9 @@ def plan_scd0(target: DataFrame, source: DataFrame,
     cols = target.columns
     src = source.select(*cols)
     ins = src.join(target.select(*key), key, "left_anti")
-    rid = F.md5(F.concat_ws(
-        "\x1f", *[F.col(k).cast("string") for k in key]))
     changes = ins.select(
         *cols, F.lit("INSERT").alias(CDC_ACTION),
-        F.lit(False).alias(CDC_ISUPDATE), rid.alias(CDC_ROW_ID))
+        F.lit(False).alias(CDC_ISUPDATE), _row_id(key).alias(CDC_ROW_ID))
     return target.unionByName(ins), changes
 
 
@@ -401,11 +422,9 @@ def _scd0_insert_once(store, spark, target_name: str, source: DataFrame,
     read_version = store.version(target_name)
     if read_version < 0:
         src = source.select(*cols)
-        rid = F.md5(F.concat_ws(
-            "\x1f", *[F.col(k).cast("string") for k in key]))
         changes = src.select(
             *cols, F.lit("INSERT").alias(CDC_ACTION),
-            F.lit(False).alias(CDC_ISUPDATE), rid.alias(CDC_ROW_ID))
+            F.lit(False).alias(CDC_ISUPDATE), _row_id(key).alias(CDC_ROW_ID))
         if store.bucket_spec(target_name) is not None:
             return store.commit(target_name, src, changes=changes,
                                 read_version=-1)
@@ -418,6 +437,8 @@ def _scd0_insert_once(store, spark, target_name: str, source: DataFrame,
     if spec is not None and set(spec[0]) <= set(key):
         bcols, n = spec
         ids = touched_buckets(source, bcols, n)
+        if not ids:
+            return read_version  # empty load: no empty commit
         target = store.read_buckets(spark, target_name, ids)
         new_target, changes = plan_scd0(target, source, key)
         return store.commit_buckets(target_name, new_target, ids,
@@ -431,11 +452,9 @@ def _scd0_insert_once(store, spark, target_name: str, source: DataFrame,
     # commit validates read_version (two racing loads of one key must
     # not both insert it; the loser re-derives via the retry wrapper).
     ins = source.select(*cols).join(target.select(*key), key, "left_anti")
-    rid = F.md5(F.concat_ws(
-        "\x1f", *[F.col(k).cast("string") for k in key]))
     changes = ins.select(
         *cols, F.lit("INSERT").alias(CDC_ACTION),
-        F.lit(False).alias(CDC_ISUPDATE), rid.alias(CDC_ROW_ID))
+        F.lit(False).alias(CDC_ISUPDATE), _row_id(key).alias(CDC_ROW_ID))
     return store.commit_append(target_name, ins, changes=changes,
                                read_version=read_version)
 
@@ -476,8 +495,9 @@ def plan_scd3(target: DataFrame, source: DataFrame, key: list[str],
     pair encoding as ``plan_upsert`` over the FULL Type-3 schema, so
     signed consumers (incremental MVs) fold prev-column transitions too.
     Physical shape mirrors plan_upsert: one categorize join (source
-    broadcastable when delta-sized) + target anti-join carry-over — the
-    target is never on the build side.
+    broadcastable when delta-sized) + the one tagged target pass of
+    ``_target_images`` for carry-over and pre-images — the target is
+    never on the build side.
     """
     cols = target.columns
     prev_cols = list(track.values())
@@ -511,29 +531,15 @@ def plan_scd3(target: DataFrame, source: DataFrame, key: list[str],
     ins = (cat.filter(F.col("_op") == "insert")
            .select(*s_base, *prev_exprs(False)).select(*cols))
 
-    def rid(prefix: str | None):
-        ks = [F.col(f"{prefix}.{k}" if prefix else k).cast("string")
-              for k in key]
-        return F.md5(F.concat_ws("\x1f", *ks))
-
-    touched = (cat.filter(F.col("_op") == "update")
-               .select(*[F.col(f"s.{k}").alias(k) for k in key]).distinct())
-    # pre-images target-side (one per PHYSICAL row — the dup-source rule
-    # plan_upsert documents)
-    upd_pre = (target.join(touched, key, "semi")
-               .select(*cols, F.lit("DELETE").alias(CDC_ACTION),
-                       F.lit(True).alias(CDC_ISUPDATE),
-                       rid(None).alias(CDC_ROW_ID)))
+    kept, upd_pre = _target_images(target, cat, key)
     changes = (
         ins.select(*cols, F.lit("INSERT").alias(CDC_ACTION),
                    F.lit(False).alias(CDC_ISUPDATE),
-                   rid(None).alias(CDC_ROW_ID))
+                   _row_id(key).alias(CDC_ROW_ID))
         .unionByName(upd.select(*cols, F.lit("INSERT").alias(CDC_ACTION),
                                 F.lit(True).alias(CDC_ISUPDATE),
-                                rid(None).alias(CDC_ROW_ID)))
+                                _row_id(key).alias(CDC_ROW_ID)))
         .unionByName(upd_pre))
-
-    kept = target.join(touched, key, "left_anti")
     new_target = kept.unionByName(upd).unionByName(ins)
     return new_target, changes
 
@@ -567,17 +573,17 @@ def _scd3_upsert_once(store, spark, target_name: str, source: DataFrame,
             *base_cols,
             *[F.lit(None).cast(schema[p].dataType).alias(p)
               for p in track.values()]).select(*cols)
-        ridc = F.md5(F.concat_ws(
-            "\x1f", *[F.col(k).cast("string") for k in key]))
         changes = src.select(
             *cols, F.lit("INSERT").alias(CDC_ACTION),
-            F.lit(False).alias(CDC_ISUPDATE), ridc.alias(CDC_ROW_ID))
+            F.lit(False).alias(CDC_ISUPDATE), _row_id(key).alias(CDC_ROW_ID))
         return store.commit(target_name, src, changes=changes,
                             read_version=-1)
     spec = store.bucket_spec(target_name)
     if spec is not None and set(spec[0]) <= set(key):
         bcols, n = spec
         ids = touched_buckets(source, bcols, n)
+        if not ids:
+            return read_version  # empty load: no empty commit
         target = store.read_buckets(spark, target_name, ids)
         new_target, changes = plan_scd3(target, source, key, compare_cols,
                                         track)
@@ -586,8 +592,8 @@ def _scd3_upsert_once(store, spark, target_name: str, source: DataFrame,
                                     read_version=read_version)
     target = store.read(spark, target_name, version=read_version)
     new_target, changes = plan_scd3(target, source, key, compare_cols, track)
-    return store.commit(target_name, new_target, changes=changes,
-                        read_version=read_version)
+    return store.commit(target_name, _sized_as(store, new_target, target),
+                        changes=changes, read_version=read_version)
 
 
 #: Lost optimistic races a writer absorbs before falling back to the
@@ -676,7 +682,7 @@ def delete_where(store, spark, target_name: str, predicate,
     # them — NULL negates to NULL, which filter discards).
     pred = F.coalesce(pred.cast("boolean"), F.lit(False))
     cols = store.schema(target_name).fieldNames()
-    rid = F.md5(F.concat_ws("\x1f", *[F.col(k).cast("string") for k in key]))
+    rid = _row_id(key)
 
     def attempt() -> int:
         # Baseline captured at snapshot-read time and pinned through
@@ -758,7 +764,7 @@ def update_where(store, spark, target_name: str, predicate,
     if unknown:
         raise ValueError(f"update_where: SET columns not in "
                          f"{target_name}'s schema: {sorted(unknown)}")
-    rid = F.md5(F.concat_ws("\x1f", *[F.col(k).cast("string") for k in key]))
+    rid = _row_id(key)
 
     def attempt() -> int:
         # Baseline at snapshot-read time (see delete_where): the

@@ -132,20 +132,37 @@ class SupplierPipeline:
 
         ``now`` is evaluated ONCE per cycle — the statement-constant
         timestamp all SCD2 rows of this load share (F1, golden
-        Setup.sql:255-258)."""
+        Setup.sql:255-258).
+
+        Every tick lands in the run history: a task that raises stops
+        the chain, and the run is recorded as FAILED with the task and
+        its error (the reference's TASK_HISTORY, Automation:116,147)
+        before the error propagates."""
         now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         t0 = time.time()
-        self.task1_truncate_raw()
-        self.task2_copy_into_raw(purge=purge)
-        self.task3_merge_landing()
-        self.task4_scd2_merge(now)
-        self.task5_refresh_master()
+        tasks = [
+            ("task1_truncate_raw", ()),
+            ("task2_copy_into_raw", (purge,)),
+            ("task3_merge_landing", ()),
+            ("task4_scd2_merge", (now,)),
+            ("task5_refresh_master", ()),
+        ]
+        for task, args in tasks:
+            try:
+                getattr(self, task)(*args)
+            except Exception as e:
+                self._record_run(t0, state="FAILED", task=task,
+                                 error=f"{type(e).__name__}: {e}")
+                raise
+        return self._record_run(t0, state="SUCCEEDED")
+
+    def _record_run(self, t0: float, **outcome) -> dict:
         run = {
             "completed_time": dt.datetime.now(dt.timezone.utc).isoformat(),
             "duration_sec": round(time.time() - t0, 3),
             "landing_version": self.store.version(LANDING),
             "staging_version": self.store.version(STAGING),
-            "state": "SUCCEEDED",
+            **outcome,
         }
         with open(self._runs_path, "a") as f:  # T4 run history
             f.write(json.dumps(run) + "\n")

@@ -99,13 +99,10 @@ def start_streaming_bm25_index(
         # cores (measured r18 at sf0.1: the 1.2 MB bootstrap batch ran
         # its corpus pass single-core — 19.2s for the run). Spread
         # only when the batch's split count is below the core count —
-        # a no-op at real scale, the queries._spread convention.
+        # a no-op at real scale, the queries._spread convention. A batch
+        # plan that reads no files counts as zero splits and is spread.
         target = batch_df.sparkSession.sparkContext.defaultParallelism
-        try:
-            n_splits = len(batch_df.inputFiles())
-        except Exception:  # non-file-backed batch plan
-            n_splits = batch_df.rdd.getNumPartitions()
-        if n_splits < target:
+        if len(batch_df.inputFiles()) < target:
             batch_df = batch_df.repartition(target)
         tf = bm25_term_freqs(bm25_tokenize_documents(
             batch_df, chunk_chars=chunk_chars, overlap=overlap,

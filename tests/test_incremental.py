@@ -173,6 +173,30 @@ def test_dup_key_source_stream_sums_to_snapshot_delta(spark, tmp_path):
     assert ch.filter("`METADATA$ACTION` = 'DELETE'").count() == 1
     assert ch.filter("`METADATA$ACTION` = 'INSERT'").count() == 2
 
+    # A load that both tombstones and updates S1: update wins, so the
+    # one physical row leaves as ONE pre-image paired with the INSERT
+    # (not a pre-image plus a tombstone), on plain and bucketed targets.
+    mixed = spark.createDataFrame(
+        [Row(supplier_key=1, supplier_code="S1", supplier_name="DEL",
+             supplier_state="CA"),
+         Row(supplier_key=1, supplier_code="S1", supplier_name="a",
+             supplier_state="TX")], schemas.SUPPLIER)
+    for bucket_by in (None, (KEY, 4)):
+        store = TableStore(str(tmp_path / f"mixed_{bucket_by is not None}"))
+        store.create("base", schemas.SUPPLIER, bucket_by=bucket_by)
+        merge_upsert(store, spark, "base", _rows(spark, [(1, "CA")]), KEY, CMP)
+        refresh_aggregate(store, spark, "mv", "base", "mv", GROUP, SUMS)
+        merge_upsert(store, spark, "base", mixed, KEY, CMP,
+                     delete_match="supplier_name = 'DEL'")
+        assert [(r["supplier_code"], r["supplier_state"])
+                for r in store.read(spark, "base").collect()] == [("S1", "TX")]
+        ch = store.read_changes(spark, "base", 0)
+        assert sorted((r["METADATA$ACTION"], r["METADATA$ISUPDATE"],
+                       r["supplier_state"]) for r in ch.collect()) == [
+            ("DELETE", True, "CA"), ("INSERT", True, "TX")]
+        refresh_aggregate(store, spark, "mv", "base", "mv", GROUP, SUMS)
+        assert _mv(store, spark) == _expected(store, spark)
+
 
 def test_refresh_tracks_deletes(spark, tmp_path):
     """delete_where emits ISUPDATE=false DELETE rows; the signed fold

@@ -636,3 +636,47 @@ def test_evolve_schema_concurrent_same_name_different_type_raises(
         list(src_schema.fields)
         + [T.StructField("supplier_fax", T.StringType(), True)]))
     assert evolve_schema_for(store2, "dim", src2) == ["supplier_fax"]
+
+
+def test_idle_tick_commits_nothing(spark, tmp_path):
+    """A tick with nothing staged — the common case under the
+    reference's 1-minute schedule — commits no empty LANDING or STAGING
+    version and attaches no empty change batch."""
+    p = SupplierPipeline(spark, str(tmp_path / "store"))
+    p.setup()
+    p.stage.put(_write_load_dir(tmp_path, "two.csv", LOAD1[:LOAD1.index("3,")]))
+    p.run_cycle(now=T1)
+    before = (p.store.version(LANDING), p.store.version(STAGING),
+              p.store.change_versions(LANDING, -1))
+    master = sorted(tuple(r) for r in p.store.read(spark, MASTER).collect())
+    assert len(master) == 2
+
+    p.run_cycle(now=T2)
+    assert (p.store.version(LANDING), p.store.version(STAGING),
+            p.store.change_versions(LANDING, -1)) == before
+    assert sorted(tuple(r) for r in
+                  p.store.read(spark, MASTER).collect()) == master
+
+
+def test_failed_cycle_lands_in_task_history(spark, tmp_path, monkeypatch):
+    """A task that raises is recorded as a FAILED run naming the task
+    and its error (TASK_HISTORY, Automation:116,147), the error still
+    propagates, and the next tick runs normally."""
+    p = SupplierPipeline(spark, str(tmp_path / "store"))
+    p.setup()
+
+    def boom():
+        raise RuntimeError("landing merge failed")
+
+    monkeypatch.setattr(p, "task3_merge_landing", boom)
+    with pytest.raises(RuntimeError):
+        p.run_cycle(now=T1)
+    failed = p.task_history()[0]
+    assert failed["state"] == "FAILED"
+    assert failed["task"] == "task3_merge_landing"
+    assert failed["error"] == "RuntimeError: landing merge failed"
+
+    monkeypatch.undo()
+    p.run_cycle(now=T2)
+    hist = p.task_history()
+    assert [r["state"] for r in hist] == ["SUCCEEDED", "FAILED"]
